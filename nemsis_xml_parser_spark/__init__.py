@@ -7,8 +7,10 @@ defers all querying to the warehouse it produces.  This package re-expresses
 that pipeline Spark-first:
 
 * ``sources``   — XML / pipe-CSV / Excel / binary-file scans (SURVEY §2.A)
-* ``operators`` — flatten, warehouse fan-out, key-scoped overwrite, dedup,
-                  similarity, text analysis, multimodal plumbing (§2.B–§2.E)
+* ``operators`` — flatten, warehouse fan-out and the PCR-scoped lake merge
+                  (``operators.warehouse.merge_into_lake``, the one writer
+                  batch and streaming ingest share), dedup, similarity,
+                  text analysis, multimodal plumbing (§2.B–§2.E)
 * ``functions`` — scalar fn library (naming parity, hashing, vectors, text)
 * ``plans``     — the analytic query layer exposed through ``queries()`` /
                   ``oracle_sql()`` in ``__spark_entry__.py`` (§2.I)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 BOOKKEEPING_PREFIX = "_"
 
-# Scratch-directory suffixes used by the rewrite paths (bookkeeping EP1,
+# Scratch-directory suffixes used by the rewrite paths (the lake merge,
 # migration) — a crash between staging write and rename must not leave a
 # directory that later scans mistake for a real dynamic table.
 SCRATCH_SUFFIXES = ("__staging", "__migrating")
@@ -36,16 +36,28 @@ def list_table_dirs(warehouse_dir: str) -> list[str]:
 
 
 def clean_scratch_dirs(warehouse_dir: str) -> list[str]:
-    """Remove leftover ``__staging``/``__migrating`` directories from a
-    crashed rewrite (the subsequent re-ingest regenerates them).  Returns the
-    removed names."""
+    """Resolve the ``__staging``/``__migrating`` directories a crashed
+    rewrite left behind.  A complete one (``_SUCCESS`` written) whose table
+    directory is gone is the table's only copy — the crash fell between
+    removing the old directory and renaming the scratch one into place —
+    so it is rolled forward.  Any other is removed (the re-ingest
+    regenerates it).  Returns the removed names."""
     import shutil
 
     removed = []
     if os.path.isdir(warehouse_dir):
-        for d in os.listdir(warehouse_dir):
-            if d.endswith(SCRATCH_SUFFIXES):
-                shutil.rmtree(os.path.join(warehouse_dir, d), ignore_errors=True)
+        for d in sorted(os.listdir(warehouse_dir)):
+            suffix = next((s for s in SCRATCH_SUFFIXES if d.endswith(s)), None)
+            if suffix is None:
+                continue
+            scratch = os.path.join(warehouse_dir, d)
+            table = scratch[: -len(suffix)]
+            if not os.path.exists(table) and os.path.exists(
+                os.path.join(scratch, "_SUCCESS")
+            ):
+                os.rename(scratch, table)
+            else:
+                shutil.rmtree(scratch, ignore_errors=True)
                 removed.append(d)
     return removed
 

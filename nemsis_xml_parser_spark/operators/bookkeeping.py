@@ -9,6 +9,11 @@ The rebuild records the same log AND uses it: ``files_to_process`` anti-joins
 incoming files against already-succeeded MD5s, giving true skip-if-seen
 idempotency on top of the overwrite semantics.
 
+``ingest_xml_files`` owns only what surrounds the write: the MD5 skip, the
+flatten, the log and the archive/error routing.  Landing the elements —
+the PCR-scoped overwrite of every table — is ``warehouse.merge_into_lake``,
+the same call the streaming ingest makes.
+
 The lake layout is plain parquet directories under a warehouse root:
 
     {root}/_files_processed/          bookkeeping log (append)
@@ -25,7 +30,6 @@ import hashlib
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -81,10 +85,12 @@ def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 
 def files_to_process(
     spark: SparkSession, warehouse_dir: str, file_paths: list[str]
-) -> tuple[list[str], list[str]]:
+) -> tuple[list[str], list[str], dict[str, str | None]]:
     """Split incoming files into (todo, skipped) by MD5 anti-join against
     previously-succeeded files (SURVEY D5 — the check the reference records
-    data for but never performs)."""
+    data for but never performs).  The third item maps every path to the
+    MD5 computed for it (None for an unreadable file), so no caller hashes
+    a file twice."""
     seen = {
         r["md5_hash"]
         for r in read_files_processed(spark, warehouse_dir)
@@ -93,10 +99,11 @@ def files_to_process(
         .distinct()
         .collect()
     }
+    digests = {p: file_md5(p) for p in file_paths}
     todo, skipped = [], []
     for p in file_paths:
-        (skipped if file_md5(p) in seen else todo).append(p)
-    return todo, skipped
+        (skipped if digests[p] in seen else todo).append(p)
+    return todo, skipped, digests
 
 
 def archive_file(path: str, archive_dir: str) -> str:
@@ -127,8 +134,9 @@ def ingest_xml_files(
 ) -> dict[str, str]:
     """EP1 pipeline (SURVEY G3) over a batch of XML files:
 
-    md5-skip → flatten → PCR-scoped overwrite per tag → warehouse write →
-    bookkeeping log → archive/error routing.  Returns {file: status}.
+    md5-skip → flatten → ``warehouse.merge_into_lake`` (the PCR-scoped
+    overwrite of every table) → bookkeeping log → archive/error routing.
+    Returns {file: status}.
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
     ONE distributed pass; per-file statuses are derived from the parse
@@ -136,10 +144,10 @@ def ingest_xml_files(
     error-dir routing (parity: main_ingest.py:386-397).
     """
     from .flatten import flatten_xml_files
-    from .warehouse import attribute_columns_per_table, table_frame, table_names
+    from .warehouse import merge_into_lake
 
     statuses: dict[str, str] = {}
-    todo, skipped = files_to_process(spark, warehouse_dir, file_paths)
+    todo, skipped, digests = files_to_process(spark, warehouse_dir, file_paths)
     for p in skipped:
         statuses[p] = "Skipped_MD5_Seen"
 
@@ -156,60 +164,7 @@ def ingest_xml_files(
         parsed_files = {
             r["file"] for r in elements.select("file").distinct().collect()
         }
-        incoming_tables = table_names(elements)
-        attr_map = attribute_columns_per_table(elements)
-
-        # PCR-scoped overwrite against every existing dynamic table
-        # (SURVEY D3): one anti-join per table on the broadcast key set.
-        pcr_keys = (
-            elements.select("pcr_uuid").where(F.col("pcr_uuid").isNotNull()).distinct()
-        )
-        # drop crashed-rewrite leftovers first so a '{table}__staging' dir is
-        # never treated as a real dynamic table, then list survivors
-        from ..catalog import clean_scratch_dirs, list_table_dirs
-
-        clean_scratch_dirs(warehouse_dir)
-        existing_tables = list_table_dirs(warehouse_dir)
-
-        def write_table(t: str) -> None:
-            path = os.path.join(warehouse_dir, t)
-            new_rows = (
-                table_frame(elements, t, attr_map.get(t, []))
-                if t in incoming_tables
-                else None
-            )
-            if t in existing_tables:
-                old = spark.read.parquet(path)
-                kept = old.join(
-                    F.broadcast(
-                        pcr_keys.withColumnRenamed("pcr_uuid", "pcr_uuid_context")
-                    ),
-                    on="pcr_uuid_context",
-                    how="left_anti",
-                )
-                merged = (
-                    kept.unionByName(new_rows, allowMissingColumns=True)
-                    if new_rows is not None
-                    else kept
-                )
-                # rewrite via a staging dir: parquet overwrite cannot read
-                # and clobber the same path in one job
-                staging = path + "__staging"
-                merged.write.mode("overwrite").parquet(staging)
-                shutil.rmtree(path)
-                os.rename(staging, path)
-            elif new_rows is not None:
-                new_rows.write.mode("overwrite").parquet(path)
-
-        # concurrent per-tag write jobs: outputs are disjoint directories and
-        # Spark's scheduler handles concurrent actions, so the only thing
-        # serial execution buys is idle cores between job barriers.  The
-        # reference processes tags inside a single-threaded per-element loop
-        # (/root/reference/main_ingest.py:429-495).
-        all_tables = sorted(set(existing_tables) | set(incoming_tables))
-        with ThreadPoolExecutor(max_workers=min(8, max(1, len(all_tables)))) as ex:
-            for fut in [ex.submit(write_table, t) for t in all_tables]:
-                fut.result()  # propagate the first failure
+        merge_into_lake(spark, elements, warehouse_dir)
 
         file_urls = {p: "file:" + os.path.abspath(p) for p in todo}
         records = []
@@ -217,7 +172,7 @@ def ingest_xml_files(
             ok = file_urls[p] in parsed_files
             status = STATUS_OK if ok else STATUS_ERROR_PARSE
             statuses[p] = status
-            records.append((os.path.basename(p), file_md5(p), status))
+            records.append((os.path.basename(p), digests[p], status))
         log_processed_files(spark, warehouse_dir, records)
 
         for p in todo:

@@ -13,7 +13,8 @@ reference's psycopg2 layer did — but set-based:
   pass per tag instead of per element);
 * ``fk_pairs`` derives the unique (child_table, parent_table) pairs
   distributively (D4);
-* ``stage_to_jdbc`` executes: DDL → set-based DELETE by PCR keys (D3) →
+* ``stage_to_jdbc`` executes: DDL + widening → set-based DELETE by PCR
+  keys (D3, ``prepare_targets_sql``, shared with the distributed path) →
   batched INSERT appends — one transaction per batch (D6) when a DBAPI
   connection is supplied.
 
@@ -228,6 +229,29 @@ def delete_by_keys_sql(table: str, keys: list[str], schema: str = "public") -> s
     )
 
 
+def prepare_targets_sql(
+    registry: dict[str, list[str]],
+    pcr_keys: list[str],
+    comments: dict[str, str] | None = None,
+    schema: str = "public",
+) -> list[str]:
+    """The statements that open every promote, per target table: CREATE
+    TABLE IF NOT EXISTS in the reference's shape, ADD COLUMN IF NOT EXISTS
+    for each attribute column — a table an earlier delivery created may
+    lack an attribute this one carries (main_ingest.py:252-271) — and the
+    set-based DELETE of the batch's PCR keys (D3)."""
+    stmts: list[str] = []
+    for table, cols in registry.items():
+        attr_cols = [
+            c for c in cols if c not in COMMON_COLUMNS and c != value_column_name(table)
+        ]
+        stmts += create_table_sql(table, attr_cols, schema, (comments or {}).get(table))
+        stmts += widen_table_sql(table, attr_cols, schema)
+        if pcr_keys:
+            stmts.append(delete_by_keys_sql(table, pcr_keys, schema))
+    return stmts
+
+
 #: DBAPI paramstyle → placeholder token (psycopg2 is "format", duckdb and
 #: most JDBC-bridged drivers are "qmark")
 _PLACEHOLDERS = {"format": "%s", "qmark": "?"}
@@ -255,8 +279,8 @@ def stage_to_jdbc(
     paramstyle: str = "format",
 ) -> dict[str, int]:
     """Execute the full staging transaction over a DBAPI connection:
-    DDL → FK DDL → set-based DELETE → batched INSERTs → commit (rollback on
-    any error — D6 parity).  Returns rows inserted per table.
+    DDL + widening → set-based DELETE → batched INSERTs → commit (rollback
+    on any error — D6 parity).  Returns rows inserted per table.
 
     ``frames`` values must be per-tag table frames (warehouse.table_frame
     shape).  This single-connection form funnels rows through the driver —
@@ -267,14 +291,9 @@ def stage_to_jdbc(
     inserted: dict[str, int] = {}
     cur = conn.cursor()
     try:
+        for stmt in prepare_targets_sql(registry, pcr_keys, comments, schema):
+            cur.execute(stmt)
         for table, cols in registry.items():
-            attr_cols = [c for c in cols if c not in COMMON_COLUMNS and c != value_column_name(table)]
-            for stmt in create_table_sql(
-                table, attr_cols, schema, (comments or {}).get(table)
-            ):
-                cur.execute(stmt)
-            if pcr_keys:
-                cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
             rows = [tuple(r) for r in frames[table].collect()]
             sql = insert_sql(table, cols, schema, paramstyle)
             for i in range(0, len(rows), batch_size):
@@ -492,9 +511,9 @@ def stage_to_jdbc_distributed(
     No data row ever passes through the driver — the driver collects one
     (table, partition_id, n_rows) metadata triple per partition.
 
-    Phase 2 (driver, ONE transaction): target DDL → set-based DELETE by PCR
-    keys → ``INSERT INTO target SELECT .. FROM stage`` per staged partition
-    → single commit.  A failure anywhere rolls the target back untouched —
+    Phase 2 (driver, ONE transaction): target DDL + widening → set-based
+    DELETE by PCR keys → ``INSERT INTO target SELECT .. FROM stage`` per
+    staged partition → single commit.  A failure anywhere rolls the target back untouched —
     the same per-file all-or-nothing guarantee as the reference
     (/root/reference/main_ingest.py:644) and as ``stage_to_jdbc``, but the
     data motion is executor-parallel server-side set operations.
@@ -600,17 +619,8 @@ def stage_to_jdbc_distributed(
     inserted: dict[str, int] = dict.fromkeys(registry, 0)
     cur = driver_conn.cursor()
     try:
-        for table, cols in registry.items():
-            attr_cols = [
-                c for c in cols
-                if c not in COMMON_COLUMNS and c != value_column_name(table)
-            ]
-            for stmt in create_table_sql(
-                table, attr_cols, schema, (comments or {}).get(table)
-            ):
-                cur.execute(stmt)
-            if pcr_keys:
-                cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
+        for stmt in prepare_targets_sql(registry, pcr_keys, comments, schema):
+            cur.execute(stmt)
         collists = {
             table: ", ".join(f'"{c}"' for c in cols)
             for table, cols in registry.items()

@@ -16,14 +16,16 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* ``write_warehouse`` defaults to ONE shuffle-free write of the canonical
-  schema ``partitionBy("table_name")`` (single Spark job for the whole
-  fan-out); ``read_table`` projects any table back into the reference's
-  exact pivoted shape via a partition-pruned scan.  ``layout="per-table"``
-  keeps the one-directory-per-tag compat layout, writing parents before
-  children using the flatten's ``depth`` (FK ordering, SURVEY §7.4).
+* ``merge_into_lake`` is the ingest sink: the PCR-scoped merge (SURVEY D3)
+  of a batch into the per-table lake, one pivoted parquet directory per
+  tag — batch ingest (``bookkeeping.ingest_xml_files``) and streaming
+  ingest (``streaming.ingest``) both land their elements through it;
+* ``write_warehouse`` is the analytic snapshot: ONE shuffle-free write of
+  the canonical schema ``partitionBy("table_name")`` (a single Spark job
+  for the whole fan-out); ``read_table`` projects any table back into the
+  reference's exact pivoted shape via a partition-pruned scan.
 
-At 100 TB the partitioned layout is the one that holds: ingest cost is a
+At 100 TB the partitioned layout is the one that holds: its write cost is a
 single job regardless of tag count (NEMSIS has hundreds of tags — per-tag
 jobs would mean hundreds of scheduler round-trips per batch), and every
 consumer read is pruned to its table's directory.
@@ -32,11 +34,13 @@ consumer read is pruned to its table's directory.
 from __future__ import annotations
 
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
+from .. import catalog
 from ..naming import COMMON_COLUMNS, table_name_for_tag, value_column_name
 
 COMMON_5_PREFIX = list(COMMON_COLUMNS)  # + the per-table value column
@@ -117,31 +121,20 @@ def table_comments(elements: DataFrame) -> dict[str, str]:
     return {r["t"]: r["path"] for r in rows}
 
 
-def write_warehouse(
-    elements: DataFrame,
-    lake_dir: str,
-    mode: str = "overwrite",
-    file_format: str = "parquet",
-    layout: str = "partitioned",
-) -> dict[str, list[str]]:
-    """Materialize the per-tag warehouse under ``lake_dir``.
-
-    ``layout="partitioned"`` (default, the 100 TB path): ONE write job of
-    the canonical element schema ``partitionBy("table_name")`` — no per-tag
-    job fan-out, no shuffle (partitioning is directory layout, not an
-    Exchange), and every per-table read is partition-pruned.  The
-    reference's exact per-table shape (value column renamed, attributes
-    pivoted) is a lazy projection applied at read time by ``read_table``.
-    Atomicity of the whole fan-out is the single job commit — closer to the
-    reference's one-transaction-per-file guarantee (main_ingest.py:500-642)
-    than N independent per-tag jobs.
-
-    ``layout="per-table"`` (compat): one pivoted parquet directory per tag,
-    written parents-before-children (ascending min-depth) so a referential
-    reader never sees a child table whose parent is missing.
+def write_warehouse(elements: DataFrame, lake_dir: str) -> dict[str, list[str]]:
+    """Materialize the partitioned warehouse under ``lake_dir``: ONE
+    overwrite job of the canonical element schema as parquet
+    ``partitionBy("table_name")`` — no per-tag job fan-out, no shuffle
+    (partitioning is directory layout, not an Exchange), and every
+    per-table read is partition-pruned.  The reference's exact per-table
+    shape (value column renamed, attributes pivoted) is a lazy projection
+    applied at read time by ``read_table``.  Atomicity of the whole fan-out
+    is the single job commit — closer to the reference's
+    one-transaction-per-file guarantee (main_ingest.py:500-642) than N
+    independent per-tag jobs.
 
     Returns {table: [columns...]} — the warehouse schema registry, in the
-    reference's pivoted shape for both layouts.
+    reference's pivoted shape.
     """
     elements = elements.cache()
     try:
@@ -152,61 +145,94 @@ def write_warehouse(
             + attr_map.get(t, [])
             for t in table_names(elements)
         }
-
-        if layout == "partitioned":
-            (
-                elements.select(
-                    F.lower(F.col("table_name")).alias("table_name"),
-                    F.col("element_id"),
-                    F.col("parent_element_id"),
-                    F.col("pcr_uuid").alias("pcr_uuid_context"),
-                    F.col("element_tag").alias("original_tag_name"),
-                    F.col("value"),
-                    F.col("attributes"),
-                )
-                .write.mode(mode)
-                .format(file_format)
-                .partitionBy("table_name")
-                .save(lake_dir)
+        (
+            elements.select(
+                F.lower(F.col("table_name")).alias("table_name"),
+                F.col("element_id"),
+                F.col("parent_element_id"),
+                F.col("pcr_uuid").alias("pcr_uuid_context"),
+                F.col("element_tag").alias("original_tag_name"),
+                F.col("value"),
+                F.col("attributes"),
             )
-            return registry
-        if layout != "per-table":
-            raise ValueError(f"unknown layout {layout!r}")
-
-        depth_rows = (
-            elements.groupBy(F.lower(F.col("table_name")).alias("t"))
-            .agg(F.min("depth").alias("d"))
-            .collect()
+            .write.mode("overwrite")
+            .partitionBy("table_name")
+            .parquet(lake_dir)
         )
-        levels: dict[int, list[str]] = {}
-        for r in depth_rows:
-            levels.setdefault(r["d"], []).append(r["t"])
-
-        def write_table(t: str) -> None:
-            frame = table_frame(elements, t, attr_map.get(t, []))
-            frame.write.mode(mode).format(file_format).save(os.path.join(lake_dir, t))
-
-        # parent-before-child across depth levels (barrier per level), but
-        # concurrent write jobs within a level — sibling tags have no
-        # referential ordering between them, so serializing them only
-        # leaves cores idle between job barriers
-        for d in sorted(levels):
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(levels[d]))
-            ) as ex:
-                for fut in [
-                    ex.submit(write_table, t) for t in sorted(levels[d])
-                ]:
-                    fut.result()
         return registry
     finally:
         elements.unpersist()
 
 
+def merge_into_lake(
+    spark: SparkSession, elements: DataFrame, warehouse_dir: str
+) -> list[str]:
+    """The PCR-scoped lake merge — "UUID-based Overwrite" (SURVEY D3) — and
+    the only writer of the per-table lake (one pivoted parquet directory
+    per tag under ``warehouse_dir``).  Returns the tables written, sorted.
+
+    The reference deletes every incoming ``pcr_uuid_context`` from EVERY
+    dynamic table, then inserts the fresh rows
+    (reference main_ingest.py:276-328,400-421) — O(tables × UUIDs)
+    DELETE round-trips.  Here each table is one set-based job against the
+    batch's (small, broadcast) key set:
+
+        kept = old ⟕anti keys ;  result = kept ∪ new
+
+    so a revised PCR that drops a section also leaves the tables that are
+    absent from the batch, other PCRs' rows stay, and NULL-keyed rows are
+    always kept (the reference only deletes per concrete UUID,
+    main_ingest.py:312-316).  A new table is a plain write; an existing one
+    is rewritten through ``{table}__staging`` and swapped in, because a
+    parquet overwrite cannot read and clobber the same path in one job.
+    ``catalog.clean_scratch_dirs`` resolves a swap a crash interrupted.
+
+    Per-tag jobs run concurrently: outputs are disjoint directories and
+    Spark's scheduler handles concurrent actions, so serial execution
+    would only buy idle cores between job barriers.  ``elements`` should be
+    cached by the caller — every table's job reads it.
+    """
+    incoming = table_names(elements)
+    if not incoming:  # nothing parsed: no key to delete, no row to add
+        return []
+    attr_map = attribute_columns_per_table(elements)
+    pcr_keys = F.broadcast(
+        elements.select(F.col("pcr_uuid").alias("pcr_uuid_context"))
+        .where(F.col("pcr_uuid_context").isNotNull())
+        .distinct()
+    )
+    catalog.clean_scratch_dirs(warehouse_dir)
+    existing = set(catalog.list_table_dirs(warehouse_dir))
+
+    def write_table(t: str) -> None:
+        path = os.path.join(warehouse_dir, t)
+        new_rows = (
+            table_frame(elements, t, attr_map.get(t, [])) if t in incoming else None
+        )
+        if t not in existing:
+            new_rows.write.mode("overwrite").parquet(path)
+            return
+        merged = spark.read.parquet(path).join(
+            pcr_keys, on="pcr_uuid_context", how="left_anti"
+        )
+        if new_rows is not None:
+            merged = merged.unionByName(new_rows, allowMissingColumns=True)
+        staging = path + "__staging"
+        merged.write.mode("overwrite").parquet(staging)
+        shutil.rmtree(path)
+        os.rename(staging, path)
+
+    tables = sorted(existing | set(incoming))
+    with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
+        for fut in [ex.submit(write_table, t) for t in tables]:
+            fut.result()  # propagate the first failure
+    return tables
+
+
 def read_table(
     spark, lake_dir: str, table: str, attr_cols: list[str] | None = None
 ) -> DataFrame:
-    """Read one table from a ``layout="partitioned"`` lake in the
+    """Read one table from a ``write_warehouse`` lake in the
     reference's exact pivoted shape (FIXTURES.md F3).
 
     The ``table_name`` filter is partition pruning (a directory pick, zero

@@ -12,8 +12,9 @@ Extra columns beyond the reference's 10 fields:
 
 * ``path``          — root-to-element sanitized path; the reference stores it
                       as the PG table comment (/root/reference/main_ingest.py:235-239)
-* ``depth``         — tree depth; gives the topological write order so parent
-                      tables land before children (FK safety at scale)
+* ``depth``         — tree depth (root = 0).  Descriptive only: no sink
+                      orders its writes by it, and the lake merge writes
+                      parent and child tables concurrently
 * ``pre_order_idx`` — document preorder position; makes hierarchical
                       fill-down and document reconstruction order-stable
 * ``file``          — source file path (lineage + per-file idempotency)

@@ -78,12 +78,9 @@ class DuckDBAPIConn:
         return self._c.execute(sql).fetchall()
 
 
-@pytest.fixture()
-def staged(spark):
-    # fresh uuids per flatten, like the reference's per-ingest uuid4
-    # (main_ingest.py element_id generation) — a re-stage of the same file
-    # therefore never collides on the PRIMARY KEY
-    els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)], deterministic_ids=False)
+def _stage_inputs(spark, xml):
+    """(elements, registry, frames, PCR keys) of one delivery."""
+    els = flatten_xml_strings(spark, [("f.xml", xml)], deterministic_ids=False)
     attr_map = attribute_columns_per_table(els)
     tables = sorted(attr_map.keys() | {t for t in (
         r["t"] for r in els.selectExpr("lower(table_name) t").distinct().collect()
@@ -96,6 +93,14 @@ def staged(spark):
     keys = [r["pcr_uuid"] for r in els.select("pcr_uuid").where(
         "pcr_uuid is not null").distinct().collect()]
     return els, registry, frames, keys
+
+
+@pytest.fixture()
+def staged(spark):
+    # fresh uuids per flatten, like the reference's per-ingest uuid4
+    # (main_ingest.py element_id generation) — a re-stage of the same file
+    # therefore never collides on the PRIMARY KEY
+    return _stage_inputs(spark, NEMSIS_XML)
 
 
 def test_stage_roundtrip_and_idempotent_restage(spark, staged):
@@ -154,6 +159,43 @@ def test_widen_table_executes_live():
     )
     conn.commit()
     assert conn.q('SELECT "newattr" FROM "public"."header"') == [("v1",)]
+
+
+@pytest.mark.parametrize("distributed", [False, True],
+                         ids=["stage_to_jdbc", "stage_to_jdbc_distributed"])
+def test_second_delivery_widens_existing_table(spark, tmp_path, distributed):
+    """A delivery whose tag carries an attribute the target table (created
+    by an earlier delivery) lacks: the promote widens the table with ADD
+    COLUMN IF NOT EXISTS before inserting (main_ingest.py:252-271)."""
+    conn = DuckDBAPIConn()
+
+    def load(xml, name):
+        els, registry, frames, keys = _stage_inputs(spark, xml)
+        if not distributed:
+            return J.stage_to_jdbc(conn, registry, frames, keys, paramstyle="qmark")
+        stage_dir = tmp_path / name
+        stage_dir.mkdir()
+        out = J.stage_to_jdbc_distributed(
+            conn, registry=registry, frames=frames, pcr_keys=keys,
+            **_duckdb_file_hooks(stage_dir),
+        )
+        for (db,) in conn.q(
+            "SELECT database_name FROM duckdb_databases() WHERE database_name LIKE 'stg%'"
+        ):
+            conn._c.execute(f"DETACH {db};")
+        return out
+
+    load(NEMSIS_XML.replace(' NV="7701"', ""), "d1")
+    assert "nv" not in {
+        r[0] for r in conn.q(
+            "SELECT column_name FROM information_schema.columns "
+            "WHERE table_name = 'evitals_06'"
+        )
+    }
+    inserted = load(NEMSIS_XML, "d2")
+    assert inserted["evitals_06"] == 1
+    # the revised PCR's row replaced the old one and carries the new column
+    assert conn.q('SELECT "nv" FROM "public"."evitals_06"') == [("7701",)]
 
 
 def test_midbatch_failure_rolls_back_everything(spark, staged):

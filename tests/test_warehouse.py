@@ -8,6 +8,7 @@ import pytest
 from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
 from nemsis_xml_parser_spark.operators.warehouse import (
     attribute_columns_per_table,
+    merge_into_lake,
     orphan_check,
     read_table,
     table_comments,
@@ -15,6 +16,7 @@ from nemsis_xml_parser_spark.operators.warehouse import (
     table_names,
     write_warehouse,
 )
+from nemsis_xml_parser_spark.naming import value_column_name
 from tests.conftest import NEMSIS_XML
 
 
@@ -105,17 +107,60 @@ def test_write_warehouse_partitioned_single_pass(elements, spark, tmp_path):
     assert orphan_check(child, parent).count() == 0
 
 
-def test_write_warehouse_per_table_compat(elements, spark, tmp_path):
+def test_merge_into_empty_lake_orphan_check(elements, spark, tmp_path):
+    """Into an empty lake the merge writes one pivoted directory per tag;
+    the lake-side FK check holds on it."""
     lake = str(tmp_path / "lake")
-    registry = write_warehouse(elements, lake, layout="per-table")
-    assert "evitals_01" in registry
-    assert sorted(os.listdir(lake)) == sorted(registry.keys())
+    tables = merge_into_lake(spark, elements, lake)
+    assert "evitals_01" in tables
+    assert sorted(os.listdir(lake)) == tables == table_names(elements)
     child = spark.read.parquet(os.path.join(lake, "evitals_vitalgroup"))
     parent = spark.read.parquet(os.path.join(lake, "evitals"))
     assert orphan_check(child, parent).count() == 0
     # negative: against the wrong parent table, everything is an orphan
     wrong = spark.read.parquet(os.path.join(lake, "erecord"))
     assert orphan_check(child, wrong).count() == child.count()
+
+
+def _lake_rows(spark, lake):
+    """(table, pcr_uuid_context, value) of every row in the lake."""
+    out = []
+    for t in sorted(os.listdir(lake)):
+        df = spark.read.parquet(os.path.join(lake, t))
+        out += [(t, r["pcr_uuid_context"], r[value_column_name(t)]) for r in df.collect()]
+    return out
+
+
+def test_merge_same_keys_replaces_and_nulls_duplicate(elements, spark, tmp_path):
+    """Merging one batch twice: keyed rows are replaced, not duplicated;
+    NULL-keyed rows duplicate — faithful to the reference, whose
+    delete-by-UUID can't target them (main_ingest.py:312-316); the
+    pipeline's MD5 skip (D5) covers the identical-file case instead."""
+    lake = str(tmp_path / "lake")
+    merge_into_lake(spark, elements, lake)
+    once = _lake_rows(spark, lake)
+    merge_into_lake(spark, elements, lake)
+    twice = _lake_rows(spark, lake)
+    assert sorted(r for r in twice if r[1] is not None) == sorted(
+        r for r in once if r[1] is not None
+    )
+    once_null = sorted(r for r in once if r[1] is None)
+    assert once_null
+    assert sorted(r for r in twice if r[1] is None) == sorted(once_null * 2)
+
+
+def test_merge_keeps_other_keys_and_nulls(spark, tmp_path):
+    xml_a = '<r><PatientCareReport UUID="A"><x>1</x></PatientCareReport><keep>y</keep></r>'
+    xml_b = '<r><PatientCareReport UUID="A"><x>2</x></PatientCareReport></r>'
+    xml_c = '<r><PatientCareReport UUID="C"><x>3</x></PatientCareReport></r>'
+    lake = str(tmp_path / "lake")
+    existing = flatten_xml_strings(spark, [("a.xml", xml_a), ("c.xml", xml_c)])
+    merge_into_lake(spark, existing, lake)
+    merge_into_lake(spark, flatten_xml_strings(spark, [("b.xml", xml_b)]), lake)
+    rows = _lake_rows(spark, lake)
+    assert sorted(r[1:] for r in rows if r[0] == "x") == [("A", "2"), ("C", "3")]
+    # NULL-keyed rows (outside any report) always survive
+    assert [r for r in rows if r[0] == "keep"] == [("keep", None, "y")]
 
 
 def test_tag_collision_merges_tables(spark):
